@@ -241,12 +241,13 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
     table — guarded by ``broadcast_bytes_threshold`` (ADVICE r3: an
     unguarded collect here OOMs the driver on a large tile table).  Callers
     go through add_elevation_docs, which probes the size and falls back to
-    the flatten→enrich→reassemble pipeline (which CAN left-semi-prune
-    tiles) when the table is too big; a direct oversize call raises."""
+    the flatten→enrich→reassemble pipeline (which CAN prune tiles to the
+    docs' working set) when the table is too big; a direct oversize call
+    raises."""
     import numpy as np
     from pyspark.sql import functions as F
 
-    from .lookup import _enrich_one_tile_codes
+    from .lookup import _enrich_one_tile_codes, _tile_map
 
     sz = tiles_bytes(tiles) if _tiles_bytes is None else _tiles_bytes
     if sz > broadcast_bytes_threshold:
@@ -255,12 +256,7 @@ def add_elevation_docs_fused(docs: DataFrame, tiles: DataFrame, *,
             f"{broadcast_bytes_threshold}; the fused single-pass form cannot "
             "prune tiles — use add_elevation_docs(strategy='auto'/'broadcast'/"
             "'cogroup'), which prunes to the docs' tile working set")
-    spark = docs.sparkSession
-    rows = tiles.select("tile_key", "sw_lat", "sw_lon", "encoding", "data").collect()
-    bc = spark.sparkContext.broadcast(
-        {(r["sw_lat"] + 90) * 512 + (r["sw_lon"] + 180):
-         (r["sw_lat"], r["sw_lon"], r["encoding"], bytes(r["data"]))
-         for r in rows})
+    bc = docs.sparkSession.sparkContext.broadcast(_tile_map(tiles))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tile_map = bc.value

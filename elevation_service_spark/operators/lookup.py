@@ -14,6 +14,8 @@ Two physical strategies, chosen for the 100 TB case:
   difference between a map-only job and a full-table shuffle.  The
   reference's LRU tile cache (tileset.js § TileSet, TILE_SET_CACHE=128)
   reappears as a per-worker decoded-grid LRU of the same default size.
+  Only requested tiles are fetched: ONE per-tile count probe of the
+  points per call yields the working set that prunes the broadcast.
 
 - ``cogroup``: when the tile working set is too big to broadcast, shuffle
   both sides by tile_key and run the kernel per cogroup.  The tile blob
@@ -141,12 +143,36 @@ def _enrich_one_tile_codes(lat: np.ndarray, lon: np.ndarray,
 
 
 def tiles_bytes(tiles: DataFrame) -> int:
-    """Total payload bytes of a tile table — one tiny map-side agg.  The
+    """Total payload bytes of a tile table — one map-only job that moves
+    no tile bytes (one length per tile row, summed on the driver).  The
     single size metric behind every broadcast-vs-spill decision (enrich's
     broadcast/cogroup pick and the fused-GeoJSON guard), so the two can
     never diverge."""
-    return (tiles.agg(F.coalesce(F.sum(F.length("data")), F.lit(0)).alias("b"))
-            .collect()[0]["b"])
+    return sum(r[0] or 0 for r in tiles.select(F.length("data")).collect())
+
+
+def _tile_map(tiles: DataFrame) -> dict:
+    """{packed tile id: (sw_lat, sw_lon, encoding, data)} for every row of
+    ``tiles`` — the broadcast payload of enrich_points and of the fused
+    GeoJSON path.  Tiles are keyed by packed int id
+    (sw_lat+90)*512 + (sw_lon+180): an int32 crosses the Arrow boundary
+    per row instead of a string, and the per-batch groupby hashes int64s
+    instead of strings."""
+    rows = tiles.select("sw_lat", "sw_lon", "encoding", "data").collect()
+    return {(r["sw_lat"] + 90) * 512 + (r["sw_lon"] + 180):
+            (r["sw_lat"], r["sw_lon"], r["encoding"], bytes(r["data"]))
+            for r in rows}
+
+
+def _working_set(points: DataFrame) -> dict[str, int]:
+    """Point count per non-null tile key: the ONE probe of the points an
+    enrich_points call makes.  Its keys are the tile working set (auto
+    pick, broadcast prune, cogroup tile side) and its counts size the
+    adaptive salt map.  Null keys (null coords) name no tile and are left
+    out.  Map-side-combined and tiny: one row per tile."""
+    rows = (points.where(F.col("tile_key").isNotNull())
+            .groupBy("tile_key").count().collect())
+    return {r[0]: r[1] for r in rows}
 
 
 def with_tile_key(points: DataFrame, key_col: str = "tile_key") -> DataFrame:
@@ -178,7 +204,16 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
     enables it exactly then: the broadcast path turns it on when the
     MAJORITY of working-set tiles need an expensive decode (not hgt /
     hgt.gz) AND the points arrive in fewer splits than workers; cheap-decode
-    (HGT) plans stay map-only.  False forces the map-only plan."""
+    (HGT) plans stay map-only.  False forces the map-only plan.
+
+    The call probes the points once for their per-tile counts
+    (_working_set); the broadcast ships only those tiles (prune_tiles=False
+    skips the probe for a forced broadcast of a known-small table).  The
+    tile working set is therefore fixed when enrich_points is CALLED, for
+    both strategies: if the points' source changes before the returned
+    DataFrame runs, rows on a tile key the probe did not see come out
+    TILE_MISSING.  Only a forced cogroup with an explicit ``salt_factor``
+    makes no probe and prunes its tile side lazily, inside the action."""
     clash = {"elevation", "status"} & set(points.columns)
     if clash:
         # fail fast and identically for BOTH strategies: the broadcast
@@ -197,16 +232,21 @@ def enrich_points(points: DataFrame, tiles: DataFrame, *,
         if strategy == "cogroup":
             raise ValueError("cogroup strategy is not supported on streaming points")
         return _enrich_broadcast(points, tiles, interpolation,
-                                 prune_tiles=False, cache_metrics=cache_metrics)
-    if strategy == "auto":
-        needed = points.select("tile_key").distinct()
-        sz = tiles_bytes(tiles.join(needed, "tile_key", "left_semi"))
-        strategy = "broadcast" if sz <= broadcast_bytes_threshold else "cogroup"
-    if strategy == "broadcast":
-        return _enrich_broadcast(points, tiles, interpolation, prune_tiles,
-                                 cache_metrics=cache_metrics,
-                                 auto_partition=partition_by_key is None)
-    return _enrich_cogroup(points, tiles, interpolation, salt_factor)
+                                 cache_metrics=cache_metrics)
+    if strategy not in ("auto", "broadcast"):
+        counts = _working_set(points) if salt_factor is None else None
+        return _enrich_cogroup(points, tiles, interpolation, salt_factor, counts)
+    # fetch only requested tiles (reference lazy-load parity): the ONE
+    # probe's keys drive both the auto pick and the prune
+    counts, src = None, tiles
+    if strategy == "auto" or prune_tiles:
+        counts = _working_set(points)
+        src = tiles.where(F.col("tile_key").isin(list(counts)))
+    if strategy == "auto" and tiles_bytes(src) > broadcast_bytes_threshold:
+        return _enrich_cogroup(points, tiles, interpolation, salt_factor, counts)
+    return _enrich_broadcast(points, src, interpolation,
+                             cache_metrics=cache_metrics,
+                             auto_partition=partition_by_key is None)
 
 
 _CHEAP_DECODE = ("hgt", "hgt.gz")
@@ -222,32 +262,19 @@ def _few_input_splits(points: DataFrame, spark) -> bool:
 
 
 def _enrich_broadcast(points: DataFrame, tiles: DataFrame,
-                      interpolation: str, prune_tiles: bool = True,
-                      cache_metrics: dict | None = None,
+                      interpolation: str, cache_metrics: dict | None = None,
                       auto_partition: bool = False) -> DataFrame:
+    """``tiles`` is the (already pruned) table to broadcast."""
     spark = points.sparkSession
-    src = tiles
-    if prune_tiles:
-        # fetch only requested tiles (reference lazy-load parity) — costs one
-        # extra pass over the points for the distinct keys; skip it when the
-        # tile table is known-small (prune_tiles=False)
-        needed = points.select("tile_key").distinct()
-        src = tiles.join(needed, "tile_key", "left_semi")
-    rows = src.select("tile_key", "sw_lat", "sw_lon", "encoding", "data").collect()
-    if auto_partition and rows:
+    tile_map = _tile_map(tiles)
+    if auto_partition and tile_map:
         # auto partition_by_key (enrich_points docstring): shuffle-spread
         # the points over tiles only when the decode bill is dominated by
         # expensive encodings AND the scan undersupplies parallelism
-        n_exp = sum(1 for r in rows if r["encoding"] not in _CHEAP_DECODE)
-        if 2 * n_exp > len(rows) and _few_input_splits(points, spark):
+        n_exp = sum(1 for t in tile_map.values() if t[2] not in _CHEAP_DECODE)
+        if 2 * n_exp > len(tile_map) and _few_input_splits(points, spark):
             points = points.repartition(F.col("tile_key"))
-    # tiles keyed by packed int id (sw_lat+90)*360 + (sw_lon+180): an int32
-    # crosses the Arrow boundary per row instead of a string, and the
-    # per-batch groupby hashes int64s instead of strings
-    bc = spark.sparkContext.broadcast(
-        {(r["sw_lat"] + 90) * 512 + (r["sw_lon"] + 180):
-         (r["sw_lat"], r["sw_lon"], r["encoding"], bytes(r["data"]))
-         for r in rows})
+    bc = spark.sparkContext.broadcast(tile_map)
 
     # scalar pandas_udf over exactly (tid, lat, lon): every other column of
     # the points table stays JVM-side and never crosses the Arrow boundary;
@@ -298,15 +325,14 @@ def _enrich_broadcast(points: DataFrame, tiles: DataFrame,
             .drop("_r"))
 
 
-def _adaptive_salt_map(points: DataFrame, target_points_per_group: int,
+def _adaptive_salt_map(counts: dict[str, int], target_points_per_group: int,
                        max_salt: int) -> dict[str, int]:
-    """Per-tile salt factor proportional to the tile's point count — the
-    'tile-hotspot salting' of SURVEY.md §4.  Only hot tiles pay the cost of
-    replicating their tile row; cold tiles keep one group.  The per-tile
-    count aggregation is map-side-combined and tiny (one row per tile)."""
-    counts = points.groupBy("tile_key").agg(F.count(F.lit(1)).alias("n")).collect()
-    return {r["tile_key"]: max(1, min(max_salt, -(-r["n"] // target_points_per_group)))
-            for r in counts}
+    """Per-tile salt factor proportional to the tile's point count
+    (``counts``, from _working_set) — the 'tile-hotspot salting' of
+    SURVEY.md §4.  Only hot tiles pay the cost of replicating their tile
+    row; cold tiles keep one group."""
+    return {key: max(1, min(max_salt, -(-n // target_points_per_group)))
+            for key, n in counts.items()}
 
 
 #: column types that cross the Arrow boundary at fixed width — carrying
@@ -319,6 +345,7 @@ _CARRY_MAX_COLS = 8
 
 def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
                     interpolation: str, salt_factor: int | None,
+                    counts: dict[str, int] | None,
                     target_points_per_group: int = 200_000,
                     max_salt: int = 64) -> DataFrame:
     """Shuffle strategy, two Arrow-width modes (r7):
@@ -345,7 +372,13 @@ def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
     kernel's numeric view).  Null-key rows (null coords -> null tile_key)
     can't equi-join; they are exactly the OUT_OF_BOUNDS rows, restored by
     the coalesce below — pinned in
-    test_null_coords_are_out_of_bounds_both_strategies."""
+    test_null_coords_are_out_of_bounds_both_strategies.
+
+    ``counts`` is the points' _working_set, probed when enrich_points was
+    called: its keys filter the tile side and, when ``salt_factor`` is
+    None, its counts size the adaptive salt map.  Only an explicit
+    ``salt_factor`` may come without it; the tile side is then pruned by a
+    lazy semi-join inside the action."""
     dtypes = dict(points.dtypes)
     nullable = {f.name: f.nullable for f in points.schema.fields}
     extras = [c for c in points.columns if c not in ("tile_key", "lat", "lon")]
@@ -367,11 +400,14 @@ def _enrich_cogroup(points: DataFrame, tiles: DataFrame,
         slim = points.select("tile_key", "lat", "lon", *transport)
     else:
         slim = points.select("tile_key", "lat", "lon")
-    tls = (tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
-           .select("tile_key", "sw_lat", "sw_lon", "encoding", "data"))
+    if counts is None:
+        tls = tiles.join(points.select("tile_key").distinct(), "tile_key", "left_semi")
+    else:
+        tls = tiles.where(F.col("tile_key").isin(list(counts)))
+    tls = tls.select("tile_key", "sw_lat", "sw_lon", "encoding", "data")
     if salt_factor is None:
         # adaptive: split only hot tiles, k ~ point_count / target
-        salt_map = _adaptive_salt_map(points, target_points_per_group, max_salt)
+        salt_map = _adaptive_salt_map(counts, target_points_per_group, max_salt)
         if any(k > 1 for k in salt_map.values()):
             entries = [x for key, k in salt_map.items() for x in (F.lit(key), F.lit(k))]
             k_col = F.coalesce(F.create_map(*entries)[F.col("tile_key")], F.lit(1))

@@ -33,6 +33,29 @@ def test_enrich_broadcast_is_map_only(spark):
     assert "Exchange" not in plan, plan
 
 
+def test_enrich_call_runs_at_most_four_jobs(spark):
+    """A default-argument enrich_points call (the crawl shape) plans from
+    ONE probe of the points (a per-key count: its shuffle stage and its
+    result under AQE), ONE size job on the pruned tiles and ONE collect of
+    their bytes — at most 4 Spark jobs inside the call.  A second
+    working-set probe or a semi-join prune (the shape that ran 9 here)
+    breaks it."""
+    from elevation_service_spark import fixtures
+    pages, _ = fixtures.pages_rows(60)
+    pages = spark.createDataFrame([(p["url"], p["text"]) for p in pages],
+                                  "url string, text string")
+    tiles = fixture_tiles_df(spark)
+    enrich_points(extract_coords(pages), tiles)  # materializes the cached tiles
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-enrich-call", "warm enrich_points call")
+    try:
+        enrich_points(extract_coords(pages), tiles)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("warm-enrich-call")
+    assert 0 < len(jobs) <= 4, jobs
+
+
 def test_extraction_is_pure_projection_no_python(spark):
     pages = (spark.read.parquet(f"{SF}/documents.parquet")
              .select(F.col("doc_id").alias("url"), "text"))

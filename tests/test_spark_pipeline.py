@@ -14,7 +14,8 @@ from elevation_service_spark.functions import (cell_id_col, mercator_x_col,
                                                mercator_y_col, skadi_key_col)
 from elevation_service_spark.operators.extract import extract_coords
 from elevation_service_spark.operators.lookup import (enrich_points,
-                                                      missing_tiles)
+                                                      missing_tiles,
+                                                      with_tile_key)
 from elevation_service_spark.sources.tiles import fixture_tiles_df
 
 PAGES_SCHEMA = T.StructType([
@@ -230,6 +231,66 @@ def test_null_coords_are_out_of_bounds_both_strategies(spark):
             assert got[pid]["elevation"] is None, (strategy, got[pid])
 
 
+def _tile_points(spark, key, n=40, grid=None, seed=5):
+    """Points inside one fixture tile and their expected bilinear
+    elevations on ``grid`` (default: the fixture grid)."""
+    _, sw_lat, sw_lon, size, _ = next(t for t in fixtures.FIXTURE_TILES if t[0] == key)
+    if grid is None:
+        grid = fixtures.tile_grid(sw_lat, sw_lon, size)
+    rng = np.random.default_rng(seed)
+    rows = [(i, sw_lat + float(rng.uniform(0.02, 0.98)),
+             sw_lon + float(rng.uniform(0.02, 0.98))) for i in range(n)]
+    expected = {i: ref_bilinear(grid, lat, lon, sw_lat, sw_lon) for i, lat, lon in rows}
+    return spark.createDataFrame(rows, "pid int, lat double, lon double"), expected
+
+
+def _elevations(df) -> dict:
+    return {r["pid"]: r["elevation"] for r in df.collect()}
+
+
+def test_salted_cogroup_with_null_coords(spark):
+    """Salted cogroup whose tile side and salt map come from the one
+    working-set probe (no null key): null-coordinate rows next to a salted
+    hot tile still come out OUT_OF_BOUNDS, and the hot tile's rows stay
+    bit-exact."""
+    from elevation_service_spark.operators.lookup import (_enrich_cogroup,
+                                                          _working_set)
+    pts, expected = _tile_points(spark, "N57E011", n=12)
+    pts = with_tile_key(pts.unionByName(spark.createDataFrame(
+        [(100, None, 11.5), (101, 57.5, None)], "pid int, lat double, lon double")))
+    tiles = fixture_tiles_df(spark)
+    counts = _working_set(pts)
+    assert counts == {"N57E011": 12}
+    got = {r["pid"]: r for r in
+           _enrich_cogroup(pts, tiles, "bilinear", None, counts,
+                           target_points_per_group=4).collect()}
+    assert {pid: got[pid]["elevation"] for pid in expected} == expected
+    for pid in (100, 101):
+        assert got[pid]["status"] == "OUT_OF_BOUNDS" and got[pid]["elevation"] is None
+
+
+def test_changed_tile_bytes_give_new_elevations(spark):
+    """Same tile key and payload length, different bytes: a later call
+    over the changed table serves the new elevations, never the previous
+    table's (the per-worker grid LRU keys on the full-payload CRC)."""
+    from elevation_service_spark.sources.tiles import TILES_SCHEMA
+    _, sw_lat, sw_lon, size, enc = fixtures.FIXTURE_TILES[0]
+    assert enc == "hgt"  # raw HGT: the payload length is fixed by the size
+    grid = fixtures.tile_grid(sw_lat, sw_lon, size, plant_void=False)
+
+    def table(g):
+        rows = [dict(r) for r in fixtures.tiles_rows()]
+        rows[0]["data"] = fixtures.encode_tile(g, enc)
+        return spark.createDataFrame(
+            [tuple(r[f.name] for f in TILES_SCHEMA.fields) for r in rows], TILES_SCHEMA)
+
+    pts, expected = _tile_points(spark, "N57E011", grid=grid)
+    assert _elevations(enrich_points(pts, table(grid))) == expected
+    shifted = grid + 7
+    _, expected2 = _tile_points(spark, "N57E011", grid=shifted)
+    assert _elevations(enrich_points(pts, table(shifted))) == expected2
+
+
 def test_cogroup_carry_nullable_bigint_exact_past_2_53(spark):
     """ADVICE r7: a NULLABLE bigint extra used to cross the Arrow
     boundary as float64 (NaN-encodes null), silently losing precision
@@ -313,7 +374,6 @@ def test_fetch_tiles_accepts_points_frame(spark, tmp_path):
     keys of a points table) — the lazy-load working-set shape."""
     import gzip as gz
     from elevation_service_spark.sources.tiles import fetch_tiles
-    from elevation_service_spark.operators.lookup import with_tile_key
     store = tmp_path / "store2"
     store.mkdir()
     (store / "N57E011.hgt.gz").write_bytes(
